@@ -16,57 +16,32 @@ already executes well (semi-joins, counts), so no custom kernels:
 from __future__ import annotations
 
 from pisa_spark.operators.postings import decode_postings
-from pisa_spark.operators.topk import make_query_terms_df, topk_search
+from pisa_spark.operators.topk import topk_search
 
 
 def _query_postings(index, queries):
     """Flat postings restricted to the query terms: (qid, term_id, doc_id,
     tf, n_query_terms). Join-before-decode so only needed runs decode.
 
-    List queries resolve term ids DRIVER-side through the index's serve
-    lexicon (the reference loads the lexicon into memory before query
-    eval, tools/queries.cpp:279-340): the distributed plan then needs no
-    lexicon join, no per-qid window, and no distinct exchange — the
-    postings restriction is an isin() filter pushed into the cached scan
-    and the tiny query table is broadcast. Falls back to the fully
-    distributed join plan for DataFrame query sets or indexes whose
-    lexicon exceeds the driver bound."""
-    from pyspark.sql import Window as W
+    Query terms resolve through the top-k executors' one resolver
+    (driver-side against the serve lexicon for list queries within the
+    serve bounds, else one lexicon join + collect): the distributed plan
+    then needs no lexicon join, no per-qid window, and no distinct
+    exchange — the postings restriction is an isin() filter pushed into
+    the cached scan and the tiny query table is broadcast."""
     from pyspark.sql import functions as F
 
-    from pisa_spark.functions.tokenize import analyze_query_terms
-    from pisa_spark.operators.topk import _serve_state
+    from pisa_spark.operators.topk import _resolve_queries, _serve_state
 
-    spark = index.lexicon.sparkSession
-    if isinstance(queries, list):
-        st = _serve_state(index, prefetch=False)
-        if st is not None:
-            per_q: dict[str, list[int]] = {}
-            for qid, term, _w in analyze_query_terms(queries, index.cfg):
-                meta = st.tmeta.get(term)
-                if meta is not None:
-                    per_q.setdefault(qid, []).append(meta[0])
-            rows = [(qid, tid, len(tids))
-                    for qid, tids in per_q.items() for tid in tids]
-            q = spark.createDataFrame(
-                rows, "qid string, term_id long, n_query_terms int")
-            tids = sorted({tid for _, tid, _ in rows})
-            flat = decode_postings(
-                index.postings.filter(F.col("term_id").isin(tids)),
-                index.cfg)
-            return F.broadcast(q).join(flat, "term_id")
-        qterms = make_query_terms_df(spark, queries, index.cfg)
-    else:
-        qterms = queries
-    q = (
-        qterms.join(index.lexicon.select("term", "term_id"), "term")
-        .withColumn("n_query_terms",
-                    F.count("*").over(W.partitionBy("qid")).cast("int"))
-        .select("qid", "term_id", "n_query_terms")
-    )
-    flat = decode_postings(index.postings.join(
-        q.select("term_id").distinct(), "term_id"), index.cfg)
-    return q.join(flat, "term_id")
+    st = _serve_state(index) if isinstance(queries, list) else None
+    terms, n_terms = _resolve_queries(index, queries, st)
+    rows = [(qid, tid, n_terms[qid]) for qid, _t, tid, *_ in terms]
+    q = index.lexicon.sparkSession.createDataFrame(
+        rows, "qid string, term_id long, n_query_terms int")
+    flat = decode_postings(
+        index.postings.filter(F.col("term_id").isin(
+            sorted({tid for _, tid, _ in rows}))), index.cfg)
+    return F.broadcast(q).join(flat, "term_id")
 
 
 def and_query(index, queries):

@@ -1,18 +1,21 @@
 """Top-k query executors: exhaustive (ranked_or), MaxScore, Block-Max-WAND.
 
-Dataflow (all algorithms share it):
+One query plan, one kernel loop; the executors differ only in WHERE the
+kernel runs:
 
-    queries --analyze--> (qid, term, weight)
-            --join lexicon-->  (qid, term_id, weight, df, cf, max_*)
-            --join postings--> one row per (qid, shard, term) posting run
-            --join shards-->   + per-shard doc-length array
-            --groupBy(qid, shard_id).applyInPandas(kernel)
-            --window top-k-->  (qid, doc_id, score, rank)
+    queries --resolve against the lexicon--> _QueryPlan
+    the plan's posting rows --kernel_frame--> per-(query, shard) partials
+                            --final k-merge--> (qid, doc_id, score, rank)
+
+- serve (list queries within the SERVE_* bounds): on the driver, over
+  cached posting rows merged into one global run per term;
+- shard pass (batch, every fallback, profiling): in one mapInPandas pass
+  over shard-partitioned postings, k-merged by a row_number window.
 
 The per-shard kernel + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
 k-merge — which is exactly Spark's partial/final TakeOrderedAndProject
-shape, here expressed as a row_number window per qid.
+shape.
 
 Kernels are numpy-vectorized adaptations of the reference traversal
 algorithms (cursor loops don't vectorize; doc-range batching does):
@@ -49,7 +52,7 @@ reference's unsafe mode.
 
 from __future__ import annotations
 
-import heapq
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -83,9 +86,9 @@ class _TermRun:
                  "doc_offs", "tf_offs", "blk_ub", "ub", "docs_bin", "tfs_bin",
                  "df", "cf", "idf", "weight", "_docs", "_tfs", "codec")
 
-    def __init__(self, row, scorer, stats, weight: float, weighted: bool,
-                 codec: str):
-        self.term_id = int(row.term_id)
+    def __init__(self, row, plan: "_QueryPlan", term_id: int, weight: float):
+        scorer, stats = plan.scorer, plan.stats
+        self.term_id = term_id
         self.n = int(row.n)
         self.base_doc = int(row.base_doc)
         self.last_doc = int(row.last_doc)
@@ -94,10 +97,9 @@ class _TermRun:
         self.tf_offs = np.asarray(row.block_tf_offs, dtype=np.int64)
         self.docs_bin = bytes(row.docs_bin)
         self.tfs_bin = bytes(row.tfs_bin)
-        self.df = int(row.df)
-        self.cf = int(row.cf)
-        self.codec = codec
-        w = F32(weight) if weighted else F32(1.0)
+        self.df, self.cf = plan.term_stats[term_id]
+        self.codec = plan.codec
+        w = F32(weight) if plan.weighted else F32(1.0)
         self.weight = w
         if scorer.separable:
             self.idf = F32(scorer.idf(np.array([self.df]), stats["num_docs"])[0]) * w
@@ -335,6 +337,16 @@ def _conjunction_docs(runs: list[_TermRun], lo: int, hi: int) -> np.ndarray:
     return cand
 
 
+def _doc_bounds(runs: list[_TermRun], cand: np.ndarray,
+                block: bool) -> np.ndarray:
+    """Per-doc score upper bound summed over the runs: from the block that
+    would contain each doc (block-max family), else from the term max."""
+    bound = np.zeros(cand.size, dtype=F32)
+    for run in runs:
+        bound += run.doc_block_ub(cand) if block else run.doc_term_ub(cand)
+    return bound
+
+
 def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                 doc_lens: np.ndarray, shard_base: int, range_span: int,
                 theta0: float, n_query_terms: int | None = None,
@@ -348,6 +360,14 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
     c.setdefault("docs_scored", 0)
     shard_end = shard_base + doc_lens.size
     topk = _TopK(k, theta0)
+
+    def score(cand: np.ndarray) -> None:
+        scores = _canonical_scores(cand, runs, scorer, stats, doc_lens,
+                                   shard_base)
+        c["docs_scored"] += int(cand.size)
+        keep = (scores >= topk.theta) & (scores > 0)
+        topk.merge(cand[keep], scores[keep])
+
     if algorithm in ("ranked_and", "block_max_ranked_and"):
         # conjunction: a term absent from this shard empties the whole shard
         if n_query_terms is not None and len(runs) < n_query_terms:
@@ -432,12 +452,8 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                 [run.docs_in(lo, hi)[0] for run in runs]))
             if cand.size == 0:
                 continue
-            bound = np.zeros(cand.size, dtype=F32)
-            for run in runs:
-                bound += (run.doc_block_ub(cand)
-                          if algorithm == "block_max_wand"
-                          else run.doc_term_ub(cand))
-            cand = cand[bound >= prune]
+            cand = cand[_doc_bounds(runs, cand, algorithm == "block_max_wand")
+                        >= prune]
         elif algorithm in ("ranked_and", "block_max_ranked_and"):
             cand = _conjunction_docs(runs, lo, hi)
             if cand.size == 0:
@@ -445,10 +461,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
             if algorithm == "block_max_ranked_and":
                 # block-level bound before scoring
                 # (block_max_ranked_and_query.hpp semantics)
-                bound = np.zeros(cand.size, dtype=F32)
-                for run in runs:
-                    bound += run.doc_block_ub(cand)
-                cand = cand[bound >= prune]
+                cand = cand[_doc_bounds(runs, cand, True) >= prune]
         elif algorithm in ("maxscore", "block_max_maxscore"):
             # non-essential prefix (ascending ub) with cum-ub strictly below
             # theta can never alone lift a doc past the threshold
@@ -502,14 +515,8 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                     cand, partial = cand[keep], partial[keep]
         else:
             raise ValueError(f"unknown algorithm {algorithm!r}")
-
-        if cand.size == 0:
-            continue
-        scores = _canonical_scores(cand, runs, scorer, stats, doc_lens,
-                                   shard_base)
-        c["docs_scored"] += int(cand.size)
-        keep = (scores >= topk.theta) & (scores > 0)
-        topk.merge(cand[keep], scores[keep])
+        if cand.size:
+            score(cand)
 
     if bulk_tail is not None and bulk_tail.size:
         prune = topk.theta * F32(1.0 - 1e-6)
@@ -522,19 +529,10 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
             if cand.size:
                 # per-doc bound at each algorithm's own granularity: block
                 # max for the block-max family, term max for wand/maxscore
-                block_refined = algorithm in ("block_max_wand",
-                                              "block_max_maxscore")
-                bound = np.zeros(cand.size, dtype=F32)
-                for run in runs:
-                    bound += (run.doc_block_ub(cand) if block_refined
-                              else run.doc_term_ub(cand))
-                cand = cand[bound >= prune]
+                cand = cand[_doc_bounds(runs, cand, algorithm in (
+                    "block_max_wand", "block_max_maxscore")) >= prune]
             if cand.size:
-                scores = _canonical_scores(cand, runs, scorer, stats,
-                                           doc_lens, shard_base)
-                c["docs_scored"] += int(cand.size)
-                keep = (scores >= topk.theta) & (scores > 0)
-                topk.merge(cand[keep], scores[keep])
+                score(cand)
     return topk.docs, topk.scores
 
 
@@ -546,7 +544,7 @@ def make_query_terms_df(spark, queries: list[str], cfg: IndexConfig):
 # ------------------------------------------------------------ serving path
 
 # driver-memory bounds for the serve caches: above these the serve path
-# declines and topk_search falls back to the fully distributed join plan
+# declines and topk_search falls back to the shard pass
 SERVE_MAX_DOCS = 1 << 23            # doc_lens dict (~64 MB int64)
 SERVE_MAX_PARTIAL_ROWS = 1 << 21    # shards x queries x k merge bound
 SERVE_COLLECT_MAX_POSTINGS = 1 << 22  # per-call driver fetch bound
@@ -563,20 +561,20 @@ class _ServeState:
     first-seen terms), bounded by SERVE_CACHE_MAX_POSTINGS with FIFO
     eviction."""
 
-    __slots__ = ("tmeta", "smeta", "bc_shards", "n_shards",
+    __slots__ = ("tmeta", "bc_shards", "n_shards",
                  "rows_by_term", "cached_postings", "complete", "term_runs",
                  "global_doc_lens")
 
     def __init__(self, tmeta, smeta, bc_shards):
         self.tmeta = tmeta
-        self.smeta = smeta
         self.bc_shards = bc_shards
         self.n_shards = len(smeta)
-        # global doc-length array indexed by docID: lets unweighted
-        # queries traverse ONE virtual shard — one kernel invocation per
-        # query instead of one per shard. Span-aligned builds leave docID
-        # gaps at bucket boundaries; gap slots stay 0 and never appear in
-        # any posting list. Requires only non-overlapping shard ranges.
+        # global doc-length array indexed by docID: lets the driver
+        # traverse ONE virtual shard — one kernel invocation per query
+        # instead of one per shard. Span-aligned builds leave docID gaps
+        # at bucket boundaries; gap slots stay 0 and never appear in any
+        # posting list. Requires only non-overlapping shard ranges (else
+        # None, and the serve path runs the shard pass).
         bases = sorted(smeta.values(), key=lambda m: m[0])
         prev_end, ok = 0, True
         for b, dl in bases:
@@ -594,35 +592,31 @@ class _ServeState:
         self.rows_by_term: dict[str, dict] = {}
         self.cached_postings = 0
         # True when the ENTIRE index's posting rows are resident (small
-        # indexes prefetch at state build, the reference's load-up-front
-        # model) — per-query fetch jobs and eviction are then skipped.
+        # indexes prefetch on the first serve call, the reference's
+        # load-up-front model) — per-query fetch jobs and eviction are
+        # then skipped.
         self.complete = False
-        # unweighted _TermRun reuse across queries, keyed (term_id,
-        # shard_id): a run is immutable except its lazily-decoded
-        # docs/tfs arrays, so repeat terms skip the block decode — the
-        # reference's cursors likewise read the same in-memory lists on
-        # every query. Evicted together with rows_by_term.
-        self.term_runs: dict[tuple[int, int], object] = {}
+        # unweighted global _TermRun reuse across queries, keyed term_id:
+        # a run is immutable except its lazily-decoded docs/tfs arrays, so
+        # repeat terms skip the block decode — the reference's cursors
+        # likewise read the same in-memory lists on every query. Evicted
+        # together with rows_by_term.
+        self.term_runs: dict[int, object] = {}
 
 
-def _serve_state(index, prefetch: bool = True):
+def _serve_state(index):
     """Build (once) or fetch the index's _ServeState; None when the index
-    exceeds the driver-memory bounds (callers fall back to the
-    distributed join plan).
+    exceeds the driver-memory bounds (callers fall back to the shard pass
+    with a lexicon join).
 
-    prefetch=False builds/returns the METADATA-ONLY state (lexicon +
-    shard meta — two bounded collects, no posting bytes): the batch
-    executor needs tmeta/smeta for driver-side query analysis but runs
-    its kernels executor-side and never reads the driver row cache, so
-    it must not pay the whole-index posting fetch. The prefetch runs
-    lazily on the first interactive-serve use instead."""
+    The state is built METADATA-ONLY (lexicon + shard meta — two bounded
+    collects, no posting bytes): the shard pass needs the lexicon for
+    driver-side query analysis and the shard-meta broadcast, but runs its
+    kernels executor-side and never reads the driver row cache, so it
+    must not pay the whole-index posting fetch. The prefetch runs on the first serve call instead."""
     cached = getattr(index, "_serve_state", None)
     if cached is not None:
-        if cached is False:
-            return None
-        if prefetch:
-            _serve_prefetch(index, cached)
-        return cached
+        return cached or None
     spark = index.lexicon.sparkSession
     if index.stats.get("num_docs", 1 << 62) > SERVE_MAX_DOCS:
         index._serve_state = False
@@ -642,9 +636,22 @@ def _serve_state(index, prefetch: bool = True):
     bc = spark.sparkContext.broadcast(smeta)
     st = _ServeState(tmeta, smeta, bc)
     index._serve_state = st
-    if prefetch:
-        _serve_prefetch(index, st)
     return st
+
+
+def _cache_rows(st, posts, tid_of_term: dict) -> int:
+    """Collect posting rows (one job) into the serve cache under their
+    terms; returns the number of postings they hold."""
+    pdf = posts.toPandas()
+    if "term" in pdf.columns:
+        terms = pdf["term"].to_numpy()
+        pdf = _with_term_ids(pdf, tid_of_term)
+    else:
+        term_of = {tid: t for t, tid in tid_of_term.items()}
+        terms = pdf["term_id"].map(term_of).to_numpy()
+    for t, row in zip(terms, pdf.itertuples(index=False)):
+        st.rows_by_term.setdefault(t, {})[int(row.shard_id)] = row
+    return int(pdf["n"].sum()) if len(pdf) else 0
 
 
 def _serve_prefetch(index, st) -> None:
@@ -657,278 +664,332 @@ def _serve_prefetch(index, st) -> None:
     bounded per-term cache handles those)."""
     if st.complete:
         return
-    tmeta = st.tmeta
-    total_postings = sum(m[1] for m in tmeta.values())
+    total_postings = sum(m[1] for m in st.tmeta.values())
     if total_postings > SERVE_CACHE_MAX_POSTINGS:
         return
     src = getattr(index, "postings_str", None)
-    pdf = (src if src is not None else index.postings).toPandas()
-    if "term" in pdf.columns:
-        pdf = pdf.assign(
-            term_id=pdf["term"].map(lambda t: tmeta[t][0]))
-    else:
-        id2term = {m[0]: t for t, m in tmeta.items()}
-        pdf = pdf.assign(term=pdf["term_id"].map(id2term))
-    id2meta = {m[0]: (m[1], m[2]) for m in tmeta.values()}
-    pdf = pdf.assign(
-        df=pdf["term_id"].map(lambda t: id2meta[int(t)][0]),
-        cf=pdf["term_id"].map(lambda t: id2meta[int(t)][1]))
-    terms_np = pdf["term"].to_numpy()
-    pdf = pdf.drop(columns=["term"])
-    for t, row in zip(terms_np, pdf.itertuples(index=False)):
-        st.rows_by_term.setdefault(t, {})[int(row.shard_id)] = row
+    _cache_rows(st, src if src is not None else index.postings,
+                {t: m[0] for t, m in st.tmeta.items()})
     st.cached_postings = total_postings
     st.complete = True
 
 
-def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
-                       weighted: bool, range_span: int,
-                       thresholds: dict[str, float] | None, with_urls: bool):
-    """Low-latency executor (the reference's interactive `queries` tool
-    shape, tools/queries.cpp:279-462).
+# ------------------------------------------------------------- query plan
 
-    The join plan pays a lexicon-join job, a postings+shards join, a
-    groupBy shuffle and a window stage per call — seconds of scheduling
-    floor for milliseconds of work. Here query terms resolve against the
-    driver-cached lexicon (no job), and the posting rows for the query
-    vocabulary are fetched in ONE column-pruned job into the per-term
-    serve cache (repeat terms: zero jobs) — then the traversal kernels run
-    driver-side over the cached rows, exactly as the reference runs them
-    over its mmap'd index. Oversized term sets (fetch above
-    SERVE_COLLECT_MAX_POSTINGS) run the kernels executor-side instead, in
-    a single mapInPandas pass over the term-filtered postings. Both modes
-    produce the join plan's exact ranking ((score desc, doc asc), same
-    kernels, same float32 scores).
+def _resolve_queries(index, queries, st) -> tuple[list[tuple], dict[str, int]]:
+    """Every known query term as (qid, term, term_id, weight, df, cf), plus
+    each query's known-term count (a conjunction empties any shard lacking
+    one). Unknown terms are dropped (reference query_parser.cpp:33-38).
+    List queries resolve against the serve state's driver lexicon with
+    zero jobs (the reference resolves against its loaded lexicon,
+    evaluate_queries.cpp:79-101); DataFrame queries and indexes over the
+    serve bounds (st None) join the lexicon and collect."""
+    if st is not None and isinstance(queries, list):
+        rows, n_terms = [], {}
+        for qid, term, w in analyze_query_terms(queries, index.cfg):
+            n_terms.setdefault(qid, 0)
+            meta = st.tmeta.get(term)
+            if meta is not None:
+                rows.append((qid, term, meta[0], float(w), meta[1], meta[2]))
+                n_terms[qid] += 1
+        return rows, n_terms
+    qterms = (make_query_terms_df(index.lexicon.sparkSession, queries,
+                                  index.cfg)
+              if isinstance(queries, list) else queries)
+    rows = [(r["qid"], r["term"], int(r["term_id"]), float(r["weight"]),
+             int(r["df"]), int(r["cf"]))
+            for r in qterms.join(
+                index.lexicon.select("term", "term_id", "df", "cf"), "term")
+            .select("qid", "term", "term_id", "weight", "df", "cf")
+            .collect()]
+    return rows, dict(Counter(r[0] for r in rows))
 
-    Returns None when the index/meta exceeds the serve bounds."""
-    from pyspark.sql import functions as F
 
-    st = _serve_state(index)
-    if st is None:
-        return None
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    codec = cfg.codec
-    thr = dict(thresholds or {})
+PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
+                  "blocks_decoded long, docs_scored long, ranges long, "
+                  "ranges_skipped long")
 
-    term_queries: dict[int, list] = {}
-    term_stats: dict[int, tuple] = {}
-    n_terms: dict[str, int] = {}
-    tid_of_term: dict[str, int] = {}
-    for qid, term, w in analyze_query_terms(queries, cfg):
-        n_terms.setdefault(qid, 0)
-        meta = st.tmeta.get(term)
-        if meta is None:
-            continue  # unknown term dropped (reference query_parser.cpp:33-38)
-        tid, df_, cf_ = meta
-        tid_of_term[term] = tid
-        term_queries.setdefault(tid, []).append((qid, float(w)))
-        term_stats[tid] = (df_, cf_)
-        n_terms[qid] += 1
-    if st.n_shards * max(1, len(n_terms)) * k > SERVE_MAX_PARTIAL_ROWS:
-        return None
 
-    out_schema = "qid string, doc_id long, score float, rank int"
-    enc_str = getattr(index, "postings_str", None)
+def _empty_partial() -> pd.DataFrame:
+    return pd.DataFrame({"qid": pd.Series(dtype=object),
+                         "doc_id": pd.Series(dtype="int64"),
+                         "score": pd.Series(dtype="float32")})
 
-    def _filtered_posts(terms: list[str]):
-        """Term-filtered posting rows with term_id/df/cf attached lazily.
-        Prefers the string-keyed rows: the id-keyed postings view is a
-        lazy broadcast join whose lexicon broadcast would be rebuilt on
-        EVERY query job (~350 ms/query measured at 60k docs)."""
-        if enc_str is not None:
-            return enc_str.filter(F.col("term").isin(terms))
-        return index.postings.filter(
-            F.col("term_id").isin([tid_of_term[t] for t in terms]))
 
-    def _attach_meta(pdf: pd.DataFrame) -> pd.DataFrame:
-        if "term" in pdf.columns:
-            pdf = pdf.assign(
-                term_id=pdf["term"].map(tid_of_term)).drop(columns=["term"])
-        return pdf.assign(
-            df=pdf["term_id"].map(lambda t: term_stats[int(t)][0]),
-            cf=pdf["term_id"].map(lambda t: term_stats[int(t)][1]))
+def _with_term_ids(pdf: pd.DataFrame, tid_of_term: dict) -> pd.DataFrame:
+    """String-keyed posting rows (postings_str) -> id-keyed rows."""
+    if "term" not in pdf.columns:
+        return pdf
+    return pdf.assign(term_id=pdf["term"].map(tid_of_term)).drop(
+        columns=["term"])
 
-    def _kernel_over_shards(shard_rows, doc_lens_of, run_cache=None):
-        """Run the traversal kernels for every (shard, query); shard_rows:
-        iterable of (shard_id, [row, ...]). run_cache (driver mode only):
-        (term_id, shard_id) -> _TermRun memo so repeat terms skip block
-        decode across calls (runs are immutable; unweighted only)."""
-        out_q, out_d, out_s = [], [], []
-        for sid, rows in shard_rows:
-            shard_base, doc_lens = doc_lens_of(int(sid))
-            by_query: dict[str, list] = {}
-            for row in rows:
-                if weighted:
-                    shared = None
-                elif run_cache is not None:
-                    rkey = (int(row.term_id), int(sid))
-                    shared = run_cache.get(rkey)
-                    if shared is None:
-                        shared = _TermRun(row, scorer, stats, 1.0, False,
-                                          codec)
-                        run_cache[rkey] = shared
-                else:
-                    shared = _TermRun(row, scorer, stats, 1.0, False, codec)
-                for qid, w in term_queries.get(int(row.term_id), ()):
-                    r = shared if shared is not None else _TermRun(
-                        row, scorer, stats, w, weighted, codec)
-                    by_query.setdefault(qid, []).append(r)
+
+class _QueryPlan:
+    """One call's queries resolved against the lexicon, plus the kernel
+    settings: everything the kernel loop reads, small enough to ship to
+    every executor."""
+
+    def __init__(self, index, queries, st, algorithm: str, k: int,
+                 weighted: bool = False, range_span: int = 16384,
+                 thresholds: dict[str, float] | None = None,
+                 profile: bool = False):
+        cfg = index.cfg
+        self.algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
+        self.k = k
+        self.weighted = weighted
+        self.range_span = range_span
+        self.thresholds = dict(thresholds or {})
+        self.profile = profile
+        self.stats = dict(index.stats)
+        self.scorer = make_scorer(cfg.scorer, cfg.scorer_params())
+        self.codec = cfg.codec
+        rows, self.n_terms = _resolve_queries(index, queries, st)
+        self.term_queries: dict[int, list] = {}  # term_id -> [(qid, weight)]
+        self.term_stats: dict[int, tuple] = {}   # term_id -> (df, cf)
+        self.tid_of_term: dict[str, int] = {}
+        for qid, term, tid, w, df_, cf_ in rows:
+            self.term_queries.setdefault(tid, []).append((qid, w))
+            self.term_stats[tid] = (df_, cf_)
+            self.tid_of_term[term] = tid
+
+    def runs_by_query(self, rows) -> dict[str, list]:
+        """One shard's posting rows as per-query term runs. An unweighted
+        run is shared by every query using the term, so the row decodes
+        once; weighted runs carry their query's weight, and profiled runs
+        stay per query so each query's decode counters are its own."""
+        share = not (self.weighted or self.profile)
+        by_query: dict[str, list] = {}
+        for row in rows:
+            tid = int(row.term_id)
+            shared = _TermRun(row, self, tid, 1.0) if share else None
+            for qid, w in self.term_queries.get(tid, ()):
+                by_query.setdefault(qid, []).append(
+                    shared if share else _TermRun(row, self, tid, w))
+        return by_query
+
+    def kernel_frame(self, shards) -> pd.DataFrame:
+        """The kernel for every (query, shard) of shards, an iterable of
+        (shard_id, shard_base, doc_lens, runs_by_query): top-k partials,
+        or one PROFILE_SCHEMA counter row per (query, shard) when
+        profiling (decode counts read off the lazily-decoded runs)."""
+        out_q, out_d, out_s, prof = [], [], [], []
+        for sid, shard_base, doc_lens, by_query in shards:
             for qid, runs in by_query.items():
-                docs_, scores_ = _run_kernel(
-                    algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                    range_span, float(thr.get(qid, 0.0)),
-                    n_query_terms=n_terms.get(qid))
-                out_q.append(np.repeat(qid, docs_.size))
-                out_d.append(docs_)
-                out_s.append(scores_)
+                counters = {} if self.profile else None
+                docs, scores = _run_kernel(
+                    self.algorithm, runs, self.k, self.scorer, self.stats,
+                    doc_lens, shard_base, self.range_span,
+                    float(self.thresholds.get(qid, 0.0)),
+                    n_query_terms=self.n_terms.get(qid), counters=counters)
+                if self.profile:
+                    decoded = [r for r in runs if r._docs is not None]
+                    prof.append((qid, sid, sum(r.n for r in decoded),
+                                 sum(int(r.blk_last.size) for r in decoded),
+                                 counters["docs_scored"], counters["ranges"],
+                                 counters["ranges_skipped"]))
+                else:
+                    out_q.append(np.repeat(qid, docs.size))
+                    out_d.append(docs)
+                    out_s.append(scores)
+        if self.profile:
+            return pd.DataFrame(prof, columns=[
+                c.split()[0] for c in PROFILE_SCHEMA.split(", ")])
         if not out_q:
-            return pd.DataFrame({"qid": pd.Series(dtype=object),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float32")})
+            return _empty_partial()
         return pd.DataFrame({
             "qid": np.concatenate(out_q),
             "doc_id": np.concatenate(out_d).astype(np.int64),
             "score": np.concatenate(out_s).astype(np.float32)})
 
-    if not term_stats:
-        partial = pd.DataFrame({"qid": pd.Series(dtype=object),
-                                "doc_id": pd.Series(dtype="int64"),
-                                "score": pd.Series(dtype="float32")})
+
+def _term_postings(index, plan: _QueryPlan, terms: list[str]):
+    """Posting rows of `terms`. Prefers the string-keyed rows: the
+    id-keyed postings view is a lazy broadcast join whose lexicon
+    broadcast would be rebuilt on EVERY query job (~350 ms/query measured
+    at 60k docs)."""
+    from pyspark.sql import functions as F
+
+    enc_str = getattr(index, "postings_str", None)
+    if enc_str is not None:
+        return enc_str.filter(F.col("term").isin(terms))
+    return index.postings.filter(
+        F.col("term_id").isin([plan.tid_of_term[t] for t in terms]))
+
+
+def _shard_pass(index, plan: _QueryPlan, st):
+    """The one executor-side plan: the plan's posting rows, whole shards
+    per partition, and ONE mapInPandas pass running the kernel loop over
+    each shard for every query — the reference's evaluate_queries shape
+    (parallel over queries, shared mmap'd index,
+    evaluate_queries.cpp:154-156) with shards as the unit of parallelism;
+    a hot term's row ships once, not once per query using it. Shard doc
+    lengths come from the serve state's broadcast, else the shards join.
+    Returns TOPK_PARTIAL_SCHEMA (PROFILE_SCHEMA when profiling) rows."""
+    from pyspark.sql import functions as F
+
+    from pisa_spark.operators.partitioning import (partition_values,
+                                                   round_robin_expr)
+
+    spark = index.lexicon.sparkSession
+    parts = spark.sparkContext.defaultParallelism
+    posts = _term_postings(index, plan, list(plan.tid_of_term))
+    smeta_bc = st.bc_shards if st is not None else None
+    if smeta_bc is None:
+        posts = posts.join(index.shards.select(
+            "shard_id", F.col("base_doc").alias("shard_base"), "doc_lens"),
+            "shard_id")
+    if getattr(index, "postings_colocated", False) and smeta_bc is not None:
+        # docwise-encoded buckets already hold whole shards: coalesce
+        # merges partitions without splitting them, so the shuffle the
+        # repartition below pays is skipped entirely
+        posts = posts.coalesce(parts)
     else:
-        missing = ([] if st.complete else
-                   [t for t in tid_of_term if t not in st.rows_by_term])
-        est_fetch = sum(st.tmeta[t][1] for t in missing)
-        if est_fetch <= SERVE_COLLECT_MAX_POSTINGS:
-            # ---- driver mode: fetch first-seen terms' rows (one job, or
-            # zero if all cached), kernel locally
-            if missing:
-                fetched = _attach_meta(_filtered_posts(missing).toPandas())
-                id2term = {tid_of_term[t]: t for t in missing}
-                for t in missing:
-                    st.rows_by_term[t] = {}
-                for row in fetched.itertuples(index=False):
-                    t = id2term[int(row.term_id)]
-                    st.rows_by_term[t][int(row.shard_id)] = row
-                st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
-                # FIFO eviction: drop oldest terms not in this query
-                current = set(tid_of_term)
-                while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
-                    victim = next((t for t in st.rows_by_term
-                                   if t not in current), None)
-                    if victim is None:
-                        break
-                    rows = st.rows_by_term.pop(victim)
-                    st.cached_postings -= sum(int(r.n) for r in rows.values())
-                    vtid = st.tmeta[victim][0]
-                    st.term_runs.pop((vtid, -1), None)
-                    for vsid in rows:
-                        st.term_runs.pop((vtid, int(vsid)), None)
-            if not weighted and st.global_doc_lens is not None:
-                # ---- whole-index traversal: every resident term's shard
-                # rows merge into ONE global run (memoized), and each query
-                # runs ONE kernel over the dense global doc space — the
-                # reference's single-cursor-set walk, vs one kernel per
-                # (shard, query). Identical ranking: same kernels, same
-                # float32 scores, docIDs/block metadata are absolute.
-                def _global_run(t: str):
-                    key = (tid_of_term[t], -1)
-                    g = st.term_runs.get(key)
-                    if g is None:
-                        rows = st.rows_by_term.get(t, {})
-                        sruns = [_TermRun(r, scorer, stats, 1.0, False,
-                                          codec) for r in rows.values()]
-                        if not sruns:
-                            return None
-                        g = (sruns[0] if len(sruns) == 1
-                             else _TermRun.merged(sruns))
-                        st.term_runs[key] = g
-                    return g
+        # shards -> partitions round-robin: shard ids are dense ints, and
+        # raw hash placement would idle ~1/e of the executors when
+        # shards ~ cores
+        vals = partition_values(spark, parts)
+        posts = posts.repartition(
+            parts, round_robin_expr(F.col("shard_id"), parts, vals))
+    posts = posts.sortWithinPartitions("shard_id")
+    bc = spark.sparkContext.broadcast(plan)
 
-                qid_terms: dict[str, list] = {}
-                for tid, qws in term_queries.items():
-                    for qid, _w in qws:
-                        qid_terms.setdefault(qid, []).append(tid)
-                term_of_tid = {tid_of_term[t]: t for t in tid_of_term}
-                gdl = st.global_doc_lens
-                out_q, out_d, out_s = [], [], []
-                for qid, tids in qid_terms.items():
-                    runs = [g for tid in tids
-                            if (g := _global_run(term_of_tid[tid]))]
-                    if not runs:
-                        continue
-                    docs_, scores_ = _run_kernel(
-                        algorithm, runs, k, scorer, stats, gdl, 0,
-                        range_span, float(thr.get(qid, 0.0)),
-                        n_query_terms=n_terms.get(qid))
-                    out_q.append(np.repeat(qid, docs_.size))
-                    out_d.append(docs_)
-                    out_s.append(scores_)
-                if out_q:
-                    partial = pd.DataFrame({
-                        "qid": np.concatenate(out_q),
-                        "doc_id": np.concatenate(out_d).astype(np.int64),
-                        "score": np.concatenate(out_s).astype(np.float32)})
-                else:
-                    partial = pd.DataFrame({
-                        "qid": pd.Series(dtype=object),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float32")})
+    def shards(pdf: pd.DataFrame):
+        plan = bc.value
+        smeta = smeta_bc.value if smeta_bc is not None else None
+        for sid, grp in _with_term_ids(pdf, plan.tid_of_term).groupby(
+                "shard_id", sort=False):
+            if smeta is not None:
+                shard_base, doc_lens = smeta[int(sid)]
             else:
-                shard_rows: dict[int, list] = {}
-                for t in tid_of_term:
-                    for sid, row in st.rows_by_term.get(t, {}).items():
-                        shard_rows.setdefault(sid, []).append(row)
-                partial = _kernel_over_shards(shard_rows.items(),
-                                              lambda sid: st.smeta[sid],
-                                              run_cache=st.term_runs)
-        else:
-            # ---- distributed mode: kernels run executor-side in one
-            # mapInPandas pass over the term-filtered postings (co-located
-            # by shard; coalesced so the python-worker round-trip count
-            # stays small for a latency-path job)
-            posts = _filtered_posts(list(tid_of_term))
-            parts = spark.sparkContext.defaultParallelism
-            if not getattr(index, "postings_colocated", False):
-                posts = posts.repartition(min(parts, st.n_shards),
-                                          "shard_id")
-            else:
-                posts = posts.coalesce(min(parts, 16))
-            bc_shards = st.bc_shards
+                shard_base = int(grp["shard_base"].iat[0])
+                doc_lens = np.asarray(grp["doc_lens"].iat[0], dtype=np.int64)
+            yield (int(sid), shard_base, doc_lens,
+                   plan.runs_by_query(grp.itertuples(index=False)))
 
-            def run(batches):
-                chunks = [c for c in batches if len(c)]
-                if not chunks:
-                    return
-                pdf = _attach_meta(chunks[0] if len(chunks) == 1
-                                   else pd.concat(chunks, ignore_index=True))
-                smeta = bc_shards.value
-                yield _kernel_over_shards(
-                    ((sid, list(grp.itertuples(index=False)))
-                     for sid, grp in pdf.groupby("shard_id", sort=False)),
-                    lambda sid: smeta[sid])
+    def run(batches):
+        # a shard's rows are contiguous (sorted) but may straddle Arrow
+        # batches: carry the last shard of each batch into the next
+        carry = None
+        for pdf in batches:
+            if carry is not None and len(carry):
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            tail = pdf["shard_id"].to_numpy() == pdf["shard_id"].iat[-1]
+            first_tail = int(np.argmax(tail))  # 0 when all rows are tail
+            carry = pdf.iloc[first_tail:]
+            if first_tail:
+                yield bc.value.kernel_frame(shards(pdf.iloc[:first_tail]))
+        if carry is not None and len(carry):
+            yield bc.value.kernel_frame(shards(carry))
 
-            partial = posts.mapInPandas(
-                run, schema=TOPK_PARTIAL_SCHEMA).toPandas()
+    return posts.mapInPandas(
+        run, schema=PROFILE_SCHEMA if plan.profile else TOPK_PARTIAL_SCHEMA)
+
+
+def _with_urls(index, ranked):
+    return (ranked.join(index.docs.select("doc_id", "url"), "doc_id")
+            .select("qid", "doc_id", "url", "score", "rank"))
+
+
+def _rank_partials(index, partial, k: int, with_urls: bool):
+    """Final k-merge of the shard partials: row_number per qid over the
+    (score desc, doc asc) total order."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    ranked = (partial.withColumn("rank", F.row_number().over(w))
+              .filter(F.col("rank") <= k))
+    if with_urls:
+        return _with_urls(index, ranked)
+    return ranked.select("qid", "doc_id", "score", "rank")
+
+
+# -------------------------------------------------------------- executors
+
+def _serve_fetch(index, st, plan: _QueryPlan, missing: list[str]) -> None:
+    """Fetch first-seen terms' posting rows into the serve cache, then
+    FIFO-evict the oldest terms this call does not use while the cache is
+    over its budget."""
+    for t in missing:
+        st.rows_by_term[t] = {}
+    st.cached_postings += _cache_rows(
+        st, _term_postings(index, plan, missing), plan.tid_of_term)
+    current = set(plan.tid_of_term)
+    while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
+        victim = next((t for t in st.rows_by_term if t not in current), None)
+        if victim is None:
+            break
+        rows = st.rows_by_term.pop(victim)
+        st.cached_postings -= sum(int(r.n) for r in rows.values())
+        st.term_runs.pop(st.tmeta[victim][0], None)
+
+
+def _global_runs(st, plan: _QueryPlan) -> dict[str, list]:
+    """Per-query runs for the whole-index traversal: a term's cached shard
+    rows merge into ONE global run (memoized when unweighted), so each
+    query runs ONE kernel over the dense global doc space — the
+    reference's single-cursor-set walk, vs one kernel per (shard, query).
+    Identical ranking: same kernels, same float32 scores, docIDs/block
+    metadata are absolute."""
+    by_query: dict[str, list] = {}
+    for t, tid in plan.tid_of_term.items():
+        for qid, w in plan.term_queries[tid]:
+            g = None if plan.weighted else st.term_runs.get(tid)
+            if g is None:
+                sruns = [_TermRun(r, plan, tid, w)
+                         for r in st.rows_by_term.get(t, {}).values()]
+                if not sruns:
+                    break
+                g = sruns[0] if len(sruns) == 1 else _TermRun.merged(sruns)
+                if not plan.weighted:
+                    st.term_runs[tid] = g
+            by_query.setdefault(qid, []).append(g)
+    return by_query
+
+
+def _topk_search_serve(index, st, plan: _QueryPlan, with_urls: bool):
+    """Low-latency executor (the reference's interactive `queries` tool
+    shape, tools/queries.cpp:279-462). The shard pass pays a scan, a
+    shuffle and a window stage per call — seconds of scheduling floor for
+    milliseconds of work. Here the plan resolved against the driver
+    lexicon (no job), first-seen terms' posting rows are fetched in ONE
+    column-pruned job into the per-term cache (repeat terms, or a
+    prefetched index: zero jobs), and the kernel runs driver-side over the
+    cached rows, as the reference runs over its mmap'd index. Oversized
+    term sets (fetch above SERVE_COLLECT_MAX_POSTINGS) run the shard pass
+    instead, and only the k-merge stays on the driver. Both produce the
+    shard pass's exact ranking."""
+    _serve_prefetch(index, st)
+    terms = list(plan.tid_of_term)
+    missing = ([] if st.complete else
+               [t for t in terms if t not in st.rows_by_term])
+    if not terms:
+        partial = _empty_partial()
+    elif (st.global_doc_lens is None or sum(st.tmeta[t][1] for t in missing)
+          > SERVE_COLLECT_MAX_POSTINGS):
+        partial = _shard_pass(index, plan, st).toPandas()
+    else:
+        if missing:
+            _serve_fetch(index, st, plan, missing)
+        partial = plan.kernel_frame(
+            [(-1, 0, st.global_doc_lens, _global_runs(st, plan))])
 
     if len(partial):
-        # driver-side k-merge of the per-shard partials — same
-        # (score desc, doc asc) total order as the join plan's window
+        # driver-side k-merge of the partials — the same (score desc,
+        # doc asc) total order as the shard pass's window
         partial = partial.sort_values(["qid", "score", "doc_id"],
                                       ascending=[True, False, True],
                                       kind="mergesort")
         partial["rank"] = (partial.groupby("qid", sort=False).cumcount() + 1
                            ).astype("int32")
-        partial = partial[partial["rank"] <= k]
+        partial = partial[partial["rank"] <= plan.k]
     else:
         partial = partial.assign(rank=pd.Series(dtype="int32"))
-    out = spark.createDataFrame(partial, out_schema)
-    if with_urls:
-        return (out.join(index.docs.select("doc_id", "url"), "doc_id")
-                .select("qid", "doc_id", "url", "score", "rank"))
-    return out
+    out = index.lexicon.sparkSession.createDataFrame(
+        partial, "qid string, doc_id long, score float, rank int")
+    return _with_urls(index, out) if with_urls else out
 
 
 def topk_search(index, queries: list[str] | object, k: int = 10,
@@ -942,85 +1003,18 @@ def topk_search(index, queries: list[str] | object, k: int = 10,
     Returns DataFrame (qid, doc_id, url, score, rank); with_urls=False skips
     the doclex join (one fewer join per query — latency path).
 
-    List queries route through the one-job serve plan (_topk_search_serve,
-    identical kernels and ranking) whenever the index fits the serve
-    bounds; the fully distributed join plan below is the fallback and the
-    path for DataFrame query sets.
+    List queries route through the driver serve plan (_topk_search_serve,
+    identical kernels and ranking) whenever the index and the call fit the
+    serve bounds; the shard pass is the fallback and the path for
+    DataFrame query sets.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    if isinstance(queries, list):
-        served = _topk_search_serve(index, queries, k, algorithm, weighted,
-                                    range_span, thresholds, with_urls)
-        if served is not None:
-            return served
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    if isinstance(queries, list):
-        qterms = make_query_terms_df(spark, queries, cfg)
-    else:
-        qterms = queries
-
-    # unknown terms are dropped by the inner join
-    # (reference query_parser.cpp:33-38)
-    q = qterms.join(index.lexicon.select("term", "term_id", "df", "cf"), "term")
-    # conjunction algorithms need the per-query term count to empty shards
-    # that lack one of the terms
-    q = q.withColumn(
-        "n_query_terms",
-        F.count("*").over(W.partitionBy("qid")).cast("int"))
-    # the query side is small by construction: broadcast it so the postings
-    # table is never shuffled (scan + broadcast-hash-join + partial prune)
-    joined = (
-        F.broadcast(q).join(index.postings, "term_id")
-        .join(index.shards.select("shard_id", "base_doc", "doc_lens")
-              .withColumnRenamed("base_doc", "shard_base"), "shard_id")
-    )
-
-    codec = cfg.codec
-    thr = dict(thresholds or {})
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard_id = key[0], int(key[1])
-        doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-        shard_base = int(pdf["shard_base"].iat[0])
-        runs = [
-            _TermRun(row, scorer, stats, float(row.weight), weighted, codec)
-            for row in pdf.itertuples(index=False)
-        ]
-        docs, scores = _run_kernel(
-            algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-            range_span, float(thr.get(qid, 0.0)),
-            n_query_terms=int(pdf["n_query_terms"].iat[0]))
-        return pd.DataFrame({
-            "qid": np.repeat(qid, docs.size),
-            "doc_id": docs,
-            "score": scores.astype(np.float32),
-        })
-
-    partial = joined.groupBy("qid", "shard_id").applyInPandas(
-        kernel, schema=TOPK_PARTIAL_SCHEMA)
-
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if not with_urls:
-        return ranked.select("qid", "doc_id", "score", "rank")
-    return (
-        ranked.join(index.docs.select("doc_id", "url"), "doc_id")
-        .select("qid", "doc_id", "url", "score", "rank")
-    )
-
-
-PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
-                  "blocks_decoded long, docs_scored long, ranges long, "
-                  "ranges_skipped long")
+    st = _serve_state(index) if isinstance(queries, list) else None
+    plan = _QueryPlan(index, queries, st, algorithm, k, weighted,
+                      range_span, thresholds)
+    if (st is not None and st.n_shards * max(1, len(plan.n_terms)) * k
+            <= SERVE_MAX_PARTIAL_ROWS):
+        return _topk_search_serve(index, st, plan, with_urls)
+    return _rank_partials(index, _shard_pass(index, plan, st), k, with_urls)
 
 
 def profile_queries(index, queries: list[str] | object, k: int = 10,
@@ -1035,50 +1029,10 @@ def profile_queries(index, queries: list[str] | object, k: int = 10,
     Returns (qid, shard_id, postings_decoded, blocks_decoded, docs_scored,
     ranges, ranges_skipped) — aggregate over shard_id for per-query totals.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    qterms = (make_query_terms_df(spark, queries, cfg)
-              if isinstance(queries, list) else queries)
-    q = qterms.join(index.lexicon.select("term", "term_id", "df", "cf"),
-                    "term")
-    q = q.withColumn("n_query_terms",
-                     F.count("*").over(W.partitionBy("qid")).cast("int"))
-    joined = (
-        F.broadcast(q).join(index.postings, "term_id")
-        .join(index.shards.select("shard_id", "base_doc", "doc_lens")
-              .withColumnRenamed("base_doc", "shard_base"), "shard_id")
-    )
-    codec = cfg.codec
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard_id = key[0], int(key[1])
-        doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-        shard_base = int(pdf["shard_base"].iat[0])
-        runs = [_TermRun(row, scorer, stats, float(row.weight), False, codec)
-                for row in pdf.itertuples(index=False)]
-        counters: dict = {}
-        _run_kernel(algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                    range_span, 0.0,
-                    n_query_terms=int(pdf["n_query_terms"].iat[0]),
-                    counters=counters)
-        decoded = [r for r in runs if r._docs is not None]
-        return pd.DataFrame({
-            "qid": [qid], "shard_id": [shard_id],
-            "postings_decoded": [sum(r.n for r in decoded)],
-            "blocks_decoded": [sum(int(r.blk_last.size) for r in decoded)],
-            "docs_scored": [counters["docs_scored"]],
-            "ranges": [counters["ranges"]],
-            "ranges_skipped": [counters["ranges_skipped"]],
-        })
-
-    return joined.groupBy("qid", "shard_id").applyInPandas(
-        kernel, schema=PROFILE_SCHEMA)
+    st = _serve_state(index) if isinstance(queries, list) else None
+    plan = _QueryPlan(index, queries, st, algorithm, k,
+                      range_span=range_span, profile=True)
+    return _shard_pass(index, plan, st)
 
 
 def topk_search_batch(index, queries: list[str], k: int = 10,
@@ -1086,165 +1040,13 @@ def topk_search_batch(index, queries: list[str], k: int = 10,
                       range_span: int = 16384,
                       thresholds: dict[str, float] | None = None,
                       with_urls: bool = False):
-    """Batch-query executor: the physical strategy for LARGE query sets.
-
-    topk_search joins the query table into the postings, which duplicates a
-    hot term's posting row once per query using it. Here the (small by
-    construction — reference query files are KBs) analyzed query set is
-    broadcast instead, the postings are filtered to the query vocabulary and
-    co-located by shard, and ONE kernel pass per shard answers every query —
-    the reference's evaluate_queries shape (parallel over queries, shared
-    mmap'd index, evaluate_queries.cpp:154-156) with shards as the unit of
-    parallelism. Results are identical to topk_search (same kernels).
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-
-    # ---- query analysis: when the driver-resident serve state exists
-    # (lexicon + shard metadata cached, same bounds as the interactive
-    # path), analyze driver-side — zero Spark jobs before the main pass.
-    # The reference's evaluate_queries likewise resolves terms against the
-    # loaded lexicon before any evaluation (evaluate_queries.cpp:79-101).
-    st = (_serve_state(index, prefetch=False)
-          if isinstance(queries, list) else None)
-    term_queries: dict[int, list] = {}
-    term_stats: dict[int, tuple] = {}
-    n_terms: dict[str, int] = {}
-    tid_of_term: dict[str, int] = {}
-    if st is not None:
-        for qid, term, w in analyze_query_terms(queries, cfg):
-            n_terms.setdefault(qid, 0)
-            meta = st.tmeta.get(term)
-            if meta is None:
-                continue  # unknown term dropped (query_parser.cpp:33-38)
-            tid, df_, cf_ = meta
-            tid_of_term[term] = tid
-            term_queries.setdefault(tid, []).append((qid, float(w)))
-            term_stats[tid] = (df_, cf_)
-            n_terms[qid] += 1
-    else:
-        qterms = (make_query_terms_df(spark, queries, cfg)
-                  if isinstance(queries, list) else queries)
-        qrows = (qterms.join(
-            index.lexicon.select("term", "term_id", "df", "cf"), "term")
-            .select("qid", "term_id", "weight", "df", "cf").collect())
-        for r in qrows:
-            term_queries.setdefault(int(r["term_id"]), []).append(
-                (r["qid"], float(r["weight"])))
-            term_stats[int(r["term_id"])] = (int(r["df"]), int(r["cf"]))
-            n_terms[r["qid"]] = n_terms.get(r["qid"], 0) + 1
-    bc = spark.sparkContext.broadcast(
-        (term_queries, term_stats, n_terms, dict(thresholds or {})))
-
-    from pisa_spark.operators.partitioning import (partition_values,
-                                                   round_robin_expr)
-
-    parts = spark.sparkContext.defaultParallelism
-    wanted = list(term_stats)
-    enc_str = getattr(index, "postings_str", None)
-    smeta_bc = st.bc_shards if st is not None else None
-    if st is not None and enc_str is not None:
-        # string-keyed rows: the id-keyed postings view is a lazy broadcast
-        # join whose lexicon broadcast would be rebuilt on every batch job
-        posts = enc_str.filter(F.col("term").isin(list(tid_of_term)))
-    elif st is not None:
-        posts = index.postings.filter(F.col("term_id").isin(wanted))
-    else:
-        posts = (index.postings.filter(F.col("term_id").isin(wanted))
-                 .join(index.shards.select(
-                     "shard_id", F.col("base_doc").alias("shard_base"),
-                     "doc_lens"), "shard_id"))
-    if getattr(index, "postings_colocated", False) and smeta_bc is not None:
-        # docwise-encoded buckets already hold whole shards: coalesce
-        # merges partitions without splitting them, so the shuffle the
-        # repartition below pays is skipped entirely
-        posts = (posts.coalesce(parts)
-                 .sortWithinPartitions("shard_id"))
-    else:
-        # shards -> partitions round-robin: shard ids are dense ints, and
-        # raw hash placement would idle ~1/e of the executors when
-        # shards ~ cores
-        vals = partition_values(spark, parts)
-        posts = (posts.repartition(
-            parts, round_robin_expr(F.col("shard_id"), parts, vals))
-            .sortWithinPartitions("shard_id"))
-
-    codec = cfg.codec
-
-    def run_shard(pdf: pd.DataFrame):
-        tq, tstats, ntq, thr = bc.value
-        if smeta_bc is not None:
-            shard_base, doc_lens = smeta_bc.value[int(pdf["shard_id"].iat[0])]
-        else:
-            doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-            shard_base = int(pdf["shard_base"].iat[0])
-        if "term" in pdf.columns:
-            pdf = pdf.assign(
-                term_id=pdf["term"].map(tid_of_term)).drop(columns=["term"])
-        pdf = pdf.assign(
-            df=pdf["term_id"].map(lambda t: tstats[int(t)][0]),
-            cf=pdf["term_id"].map(lambda t: tstats[int(t)][1]),
-            weight=1.0)
-        by_query: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            shared = None if weighted else _TermRun(
-                row, scorer, stats, 1.0, False, codec)
-            for qid, w in tq.get(int(row.term_id), ()):
-                # unweighted runs share one object => one decode per row
-                # even when many queries use the term
-                run = shared if shared is not None else _TermRun(
-                    row, scorer, stats, w, weighted, codec)
-                by_query.setdefault(qid, []).append(run)
-        out_q, out_d, out_s = [], [], []
-        for qid, runs in by_query.items():
-            docs, scores = _run_kernel(
-                algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                range_span, float(thr.get(qid, 0.0)),
-                n_query_terms=ntq.get(qid))
-            out_q.append(np.repeat(qid, docs.size))
-            out_d.append(docs)
-            out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-        return pd.DataFrame({
-            "qid": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s).astype(np.float32)})
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["shard_id"].iat[-1]
-            tail = pdf["shard_id"].to_numpy() == last
-            if tail.all():
-                carry = pdf
-                continue
-            first_tail = int(np.flatnonzero(tail).min())
-            complete, carry = pdf.iloc[:first_tail], pdf.iloc[first_tail:]
-            for _, grp in complete.groupby("shard_id", sort=False):
-                yield run_shard(grp)
-        if carry is not None and len(carry):
-            for _, grp in carry.groupby("shard_id", sort=False):
-                yield run_shard(grp)
-
-    partial = posts.mapInPandas(run, schema=TOPK_PARTIAL_SCHEMA)
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = (partial.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k))
-    if not with_urls:
-        return ranked.select("qid", "doc_id", "score", "rank")
-    return (ranked.join(index.docs.select("doc_id", "url"), "doc_id")
-            .select("qid", "doc_id", "url", "score", "rank"))
+    """Batch-query executor for LARGE query sets: always the shard pass
+    and its window k-merge, reading only the serve state's metadata.
+    Results are identical to topk_search."""
+    st = _serve_state(index) if isinstance(queries, list) else None
+    plan = _QueryPlan(index, queries, st, algorithm, k, weighted,
+                      range_span, thresholds)
+    return _rank_partials(index, _shard_pass(index, plan, st), k, with_urls)
 
 
 def _corpus_tf(docs_df, id_col: str, text_col: str):
@@ -1259,8 +1061,6 @@ def _corpus_tf(docs_df, id_col: str, text_col: str):
     the parquet input), and doc_len / df / cf / collection stats are all
     derived from it: dl == sum(tf) per doc and cf == sum(tf) per term are
     the same integers toks.groupBy(...).count() produces."""
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
     from pisa_spark.functions.tokenize import english_tokens
@@ -1306,6 +1106,49 @@ def _corpus_tf(docs_df, id_col: str, text_col: str):
     return tf, int(row["n"]), int(row["t"] or 0)
 
 
+def _exhaustive_topk(docs_df, queries: list[str], k: int, id_col: str,
+                     text_col: str, cfg: IndexConfig | None, stat: str,
+                     partial_of, positive_only: bool = False):
+    """The exhaustive DataFrame top-k skeleton the four scorers share:
+    _corpus_tf -> per-term `stat` ("df" or "cf") -> join the query terms
+    -> sum of per-term partials per (qid, doc) -> window top-k. Each
+    scorer contributes only partial_of(n_docs, avg_len, collection_len),
+    its per-posting Column over tf, dl and the joined stat.
+
+    Double precision throughout: this is the cross-engine (DuckDB) oracle
+    path; the float32 reference-faithful path is the index + kernel
+    executors. Ranking is on round(score, 6) with doc-asc ties so both
+    engines agree on near-equal sums. positive_only drops docs whose
+    rounded score is not > 0."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    cfg = cfg or IndexConfig()
+    spark = docs_df.sparkSession
+    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
+    agg = F.count("*") if stat == "df" else F.sum("tf")
+    stat_t = tf.groupBy("term").agg(agg.alias(stat))
+    avg_len = float(total) / n_docs if n_docs else 1.0
+
+    qrows = sorted({(qid, term) for qid, term, _ in
+                   analyze_query_terms(queries, cfg)})
+    qdf = spark.createDataFrame(qrows, "qid string, term string")
+
+    scored = (
+        qdf.join(tf, "term").join(stat_t, "term")
+        .select("qid", "doc_id",
+                partial_of(n_docs, avg_len, total).alias("partial"))
+        .groupBy("qid", "doc_id")
+        .agg(F.round(F.sum("partial"), 6).alias("score"))
+    )
+    if positive_only:
+        scored = scored.filter(F.col("score") > 0)
+    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "doc_id", "score", "rank"))
+
+
 def bm25_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                         id_col: str = "doc_id", text_col: str = "text",
                         k1: float = 0.9, b: float = 0.4,
@@ -1313,47 +1156,24 @@ def bm25_topk_dataframe(docs_df, queries: list[str], k: int = 10,
     """Pure-DataFrame exhaustive BM25 top-k over raw documents — the
     reference's ranked_or_taat (ranked_or_taat_query.hpp:9-37) expressed as
     Spark's natural groupBy(doc).sum -> window top-k shape, entirely in
-    built-in functions (whole-stage codegen, no UDF, no index needed).
-
-    Double precision throughout: this is the cross-engine (DuckDB) oracle
-    path; the float32 reference-faithful path is the index + kernel
-    executors. Ranking is on round(score, 6) with doc-asc ties so both
-    engines agree on near-equal sums."""
-    from pyspark.sql import Window as W
+    built-in functions (whole-stage codegen, no UDF, no index needed)."""
     from pyspark.sql import functions as F
 
+    def partial(n_docs, avg_len, _collection_len):
+        idf = (
+            F.greatest(F.lit(1e-6),
+                       F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
+                             / (F.col("df") + 0.5)))
+            * F.lit(1.0 + k1)
+        )
+        part = F.col("tf") / (
+            F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
+                                       + F.lit(b) * F.col("dl")
+                                       / F.lit(avg_len)))
+        return idf * part
 
-    cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
-
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
-
-    idf = (
-        F.greatest(F.lit(1e-6),
-                   F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                         / (F.col("df") + 0.5)))
-        * F.lit(1.0 + k1)
-    )
-    part = F.col("tf") / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
-                                   + F.lit(b) * F.col("dl") / F.lit(avg_len)))
-    scored = (
-        qdf.join(tf, "term").join(df_t, "term")
-        .select("qid", "doc_id", (idf * part).alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "score", "rank")
-    )
+    return _exhaustive_topk(docs_df, queries, k, id_col, text_col, cfg,
+                            "df", partial)
 
 
 def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1361,39 +1181,20 @@ def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                        mu: float = 1000.0, cfg: IndexConfig | None = None):
     """Pure-DataFrame exhaustive QLD (Dirichlet LM) top-k — the reference
     scorer/qld.hpp:25-38 formula max(0, ln(mu/(dl+mu)) + ln1p(f*C/(mu*cf)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='qld') +
-    the kernel executors)."""
-    from pyspark.sql import Window as W
+    as built-in expressions (the float32-faithful path is
+    IndexConfig(scorer='qld') + the kernel executors)."""
     from pyspark.sql import functions as F
 
+    def partial(_n_docs, _avg_len, collection_len):
+        part = (
+            F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
+            + F.log1p(F.col("tf") * (F.lit(float(collection_len))
+                                     / (F.lit(mu) * F.col("cf"))))
+        )
+        return F.greatest(F.lit(0.0), part)
 
-    cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, _n_docs, collection_len = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
-
-    part = (
-        F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
-        + F.log1p(F.col("tf") * (F.lit(float(collection_len))
-                                 / (F.lit(mu) * F.col("cf"))))
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id",
-                F.greatest(F.lit(0.0), part).alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _exhaustive_topk(docs_df, queries, k, id_col, text_col, cfg,
+                            "cf", partial, positive_only=True)
 
 
 def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1406,46 +1207,27 @@ def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         f    = cf / N
         norm * (tfn*log2(1/f) + f*ln(1/2) + 0.5*log2(2*pi*tfn)
                 + tfn*(log2(tfn) - ln(1/2)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='pl2') +
-    the kernel executors)."""
+    as built-in expressions (the float32-faithful path is
+    IndexConfig(scorer='pl2') + the kernel executors)."""
     import math
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    def partial(n_docs, avg_len, _collection_len):
+        tfn = F.col("tf") * F.log2(F.lit(1.0)
+                                   + F.lit(c * avg_len) / F.col("dl"))
+        norm = F.lit(1.0) / (tfn + F.lit(1.0))
+        freq = F.col("cf") / F.lit(float(n_docs))
+        e = F.lit(math.log(0.5))
+        return norm * (
+            tfn * F.log2(F.lit(1.0) / freq)
+            + freq * e
+            + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
+            + tfn * (F.log2(tfn) - e)
+        )
 
-    cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
-
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
-
-    tfn = F.col("tf") * F.log2(F.lit(1.0)
-                               + F.lit(c * avg_len) / F.col("dl"))
-    norm = F.lit(1.0) / (tfn + F.lit(1.0))
-    freq = F.col("cf") / F.lit(float(n_docs))
-    e = F.lit(math.log(0.5))
-    part = norm * (
-        tfn * F.log2(F.lit(1.0) / freq)
-        + freq * e
-        + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
-        + tfn * (F.log2(tfn) - e)
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id", part.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _exhaustive_topk(docs_df, queries, k, id_col, text_col, cfg,
+                            "cf", partial)
 
 
 def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1456,44 +1238,26 @@ def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         f    = tf/dl
         norm = (1-f)^2 / (tf+1)
         norm * (tf*log2((tf*avgdl/dl) * (N/cf)) + 0.5*log2(2*pi*tf*(1-f)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='dph') +
-    the kernel executors)."""
+    as built-in expressions (the float32-faithful path is
+    IndexConfig(scorer='dph') + the kernel executors)."""
     import math
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    def partial(n_docs, avg_len, _collection_len):
+        f = F.col("tf") / F.col("dl")
+        norm = ((F.lit(1.0) - f) * (F.lit(1.0) - f)
+                / (F.col("tf") + F.lit(1.0)))
+        return norm * (
+            F.col("tf") * F.log2(
+                (F.col("tf") * F.lit(avg_len) / F.col("dl"))
+                * (F.lit(float(n_docs)) / F.col("cf")))
+            + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * F.col("tf")
+                                  * (F.lit(1.0) - f))
+        )
 
-    cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
-
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
-
-    f = F.col("tf") / F.col("dl")
-    norm = (F.lit(1.0) - f) * (F.lit(1.0) - f) / (F.col("tf") + F.lit(1.0))
-    part = norm * (
-        F.col("tf") * F.log2(
-            (F.col("tf") * F.lit(avg_len) / F.col("dl"))
-            * (F.lit(float(n_docs)) / F.col("cf")))
-        + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * F.col("tf")
-                              * (F.lit(1.0) - f))
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id", part.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _exhaustive_topk(docs_df, queries, k, id_col, text_col, cfg,
+                            "cf", partial)
 
 
 def trec_output(results_df, run_id: str = "pisa_spark"):

@@ -232,8 +232,13 @@ def load_stream_index(spark, out_dir: str,
         postings = postings.unionByName(p)
     postings = postings.persist()
 
+    # one path per manifest segment, like the postings above: the plan
+    # then names the segment set, so a persisted `shards` of an earlier
+    # load (fewer segments, same directory) can never answer for this one
+    # through Spark's cache manager
     docs = spark.read.option("basePath", os.path.join(out_dir, "docs")) \
-        .parquet(os.path.join(out_dir, "docs")).drop("segment") \
+        .parquet(*(os.path.join(out_dir, f"docs/segment={s['segment']}")
+                   for s in state["segments"])).drop("segment") \
         .withColumn("shard_id",
                     (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long"))
     shards = (docs.groupBy("shard_id")

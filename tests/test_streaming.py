@@ -70,6 +70,34 @@ def test_incremental_pruned_matches_exhaustive(spark, corpus):
         assert _key(got) == _key(oracle), alg
 
 
+def test_reload_while_previous_index_cached(spark, corpus):
+    """Reloading a grown stream directory while the previous load is still
+    cached must serve every segment's docs: ranked_or over the reload
+    equals a fresh batch build over the same documents."""
+    import tempfile
+
+    queries = webtext.synth_queries(15, seed=11)
+    with tempfile.TemporaryDirectory() as out:
+        pages = extract_pages(corpus, CFG).orderBy("url").collect()
+        half = len(pages) // 2
+        for rows in (pages[:half], pages[half:]):
+            ingest_batch(spark.createDataFrame(rows, "url string, text string"),
+                         out, CFG, html_col=None)
+            sidx = load_stream_index(spark, out, CFG)  # previous one kept
+            got = topk_search(sidx, queries, k=10,
+                              algorithm="ranked_or").collect()
+        assert sidx.stats["num_docs"] == len(pages)
+        bidx = build_index(
+            spark.createDataFrame(pages, "url string, text string"), CFG)
+        want = topk_search(bidx, queries, k=10,
+                           algorithm="ranked_or").collect()
+        gk = sorted((r.qid, r.rank, r.url, round(float(r.score), 4))
+                    for r in got)
+        wk = sorted((r.qid, r.rank, r.url, round(float(r.score), 4))
+                    for r in want)
+        assert gk == wk
+
+
 def test_stream_index_readstream(spark, corpus, tmp_path):
     """End-to-end through writeStream/foreachBatch with availableNow."""
     src_dir = str(tmp_path / "incoming")

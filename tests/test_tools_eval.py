@@ -307,6 +307,18 @@ def test_profile_queries_counters(index, queries):
     assert (prof_bmw.ranges >= prof_bmw.ranges_skipped).all()
     assert (prof_bmw.postings_decoded >= 0).all()
     assert (prof_bmw.blocks_decoded >= 0).all()
+    # counters are per query: a query's rows from one call over the set
+    # equal its rows when profiled alone (no decoded run shared across
+    # queries leaks into postings_decoded / blocks_decoded)
+    cols = ["qid", "shard_id", "postings_decoded", "blocks_decoded",
+            "docs_scored", "ranges", "ranges_skipped"]
+    together = sorted(map(tuple, prof_bmw[cols].values.tolist()))
+    alone = sorted(
+        tuple(row) for q in queries[:6]
+        for row in profile_queries(index, [q], k=K,
+                                   algorithm="block_max_wand")
+        .toPandas()[cols].values.tolist())
+    assert together == alone
 
 
 def test_kstem_base_lexicon_probes():

@@ -172,20 +172,23 @@ def test_trec_output_format(index):
 
 def test_batch_executor_identity(index, queries):
     """topk_search_batch (shard-partitioned, queries broadcast) returns
-    exactly what the join executor returns, for every algorithm."""
+    exactly what the serve executor returns, for every algorithm, with
+    and without per-term query weights (the query set has duplicate-term
+    queries, so weighting changes their scores)."""
     from pisa_spark.operators.topk import topk_search_batch
 
     def key(rows):
         return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
                       for r in rows)
 
-    for alg in ("ranked_or", "maxscore", "block_max_wand", "wand",
-                "ranked_and"):
-        a = key(topk_search(index, queries, k=K, algorithm=alg,
-                            with_urls=False).collect())
-        b = key(topk_search_batch(index, queries, k=K,
-                                  algorithm=alg).collect())
-        assert a == b, alg
+    for weighted in (False, True):
+        for alg in ("ranked_or", "maxscore", "block_max_wand", "wand",
+                    "ranked_and"):
+            a = key(topk_search(index, queries, k=K, algorithm=alg,
+                                weighted=weighted, with_urls=False).collect())
+            b = key(topk_search_batch(index, queries, k=K, algorithm=alg,
+                                      weighted=weighted).collect())
+            assert a == b, (alg, weighted)
 
 
 def test_batch_executor_skips_posting_prefetch(index, queries):
@@ -208,9 +211,10 @@ def test_batch_executor_skips_posting_prefetch(index, queries):
 
 def test_serve_path_decline_and_eviction(index, queries, monkeypatch):
     """The serve plan must (a) decline and fall back to the distributed
-    join plan when the index exceeds its driver-memory bounds, and (b)
-    return identical rankings under a tiny posting-cache budget that
-    forces FIFO eviction between calls."""
+    plan when the index exceeds its driver-memory bounds, (b) return
+    identical rankings under a tiny posting-cache budget that forces FIFO
+    eviction between calls, and (c) return identical rankings when the
+    call's term set is over the per-call driver fetch bound."""
     from pisa_spark.operators import topk as T
 
     def key(rows):
@@ -247,6 +251,17 @@ def test_serve_path_decline_and_eviction(index, queries, monkeypatch):
                                   algorithm="block_max_wand",
                                   with_urls=False).collect())
         assert got_a == base_a and got_b == base_b
+    # (c) oversized term set: nothing resident (no prefetch under the tiny
+    # cache budget) and a zero per-call fetch bound, so the kernels run
+    # executor-side and only the k-merge stays on the driver
+    monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 0)
+    del index._serve_state
+    oversized = key(T.topk_search(index, queries, k=K,
+                                  algorithm="block_max_wand",
+                                  with_urls=False).collect())
+    st = index._serve_state
+    assert not st.complete and not st.rows_by_term  # no driver fetch
+    assert oversized == baseline
     if hasattr(index, "_serve_state"):
         del index._serve_state
 
